@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
-"""Local stand-in for the driver's correctness gate: load each Verify
-output parquet, run the oracle SQL in DuckDB over the same sf dir, sort
-columns by name + rows, and compare values."""
+"""Correctness gate over a Verify dump: for every query named
+in Verify's oracle_sql.json or gates.json, load its output parquet, run
+the oracle SQL in DuckDB over the same sf dir, sort columns by name +
+rows, and compare values. A missing or empty output is a FAIL; exit 1 on
+any FAIL."""
 import json, math, sys
 from pathlib import Path
 
@@ -17,6 +19,7 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
 oracle = json.loads((OUT / "oracle_sql.json").read_text())
+gates = json.loads((OUT / "gates.json").read_text())
 passed, failed, rows_only = [], [], []
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -24,18 +27,17 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), ignore_index=True)
     return df
 
-for qdir in sorted(OUT.iterdir()):
-    if not qdir.is_dir():
-        continue
-    name = qdir.name
-    try:
-        spark_df = pd.concat([pd.read_parquet(p) for p in qdir.glob("*.parquet")],
-                             ignore_index=True)
-    except ValueError:
+for name in sorted(oracle.keys() | gates.keys()):
+    parts = sorted((OUT / name).glob("*.parquet"))
+    if not parts:
         failed.append((name, "no spark output"))
         continue
+    spark_df = pd.concat([pd.read_parquet(p) for p in parts], ignore_index=True)
     if name not in oracle:
-        rows_only.append((name, len(spark_df)))
+        if spark_df.empty:
+            failed.append((name, "rows-only output is empty"))
+        else:
+            rows_only.append((name, len(spark_df)))
         continue
     try:
         duck_df = con.sql(oracle[name]).df()

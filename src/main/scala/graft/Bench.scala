@@ -1,93 +1,91 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
 object Bench {
+  /** A query's fastest run and its slowest wall seconds, or the message
+    * of the run that threw — a failure is never recorded as a time. */
+  type Outcome = Either[String, (Harness.Run, Double)]
+
+  /** The dedup/ANN family is the most GC/cache-sensitive (checkpointed
+    * signatures, broadcast candidate sets); it gets `runsHeavy` runs so a
+    * single perturbed execution can't define the reported minimum. */
+  private def heavy(name: String): Boolean = name.startsWith("dedup_") || name.startsWith("ann_")
+
+  /** Warm-run protocol, matching the reference's published numbers and
+    * its own harness (paper §7.1 reports WARM latencies; in-repo
+    * DPPerfBenchmarks uses runCount=7): each query runs `runs` times
+    * (`runsHeavy` for [[heavy]] ones) and the minimum is reported.
+    * Spark's data cache is cleared between runs — only code paths
+    * (codegen, JIT) stay warm, the data is re-read every run. The
+    * fastest run's layer line goes to stderr. */
+  def measure(spark: SparkSession, sfDir: String, queries: Map[String, Harness.Query],
+      runs: Int, runsHeavy: Int, layers: Harness.Layers): Map[String, Outcome] = {
+    // Throwaway execution of one REAL query before any timing: the
+    // generic warmup doesn't touch the aggregate/shuffle codegen paths,
+    // so the first timed query absorbed ~1.6 s of residual session
+    // warmup (r3: nextk_basic 1.78 s vs the identically-shaped
+    // nextk_desc 0.17 s) — distorting cross-round comparisons whenever
+    // Bench runs with SPARK_GRAFT_RUNS=1.
+    val warmFailure = queries.headOption.flatMap { case (name, fn) =>
+      val failed = try { fn(spark, sfDir).count(); None }
+        catch { case e: Throwable => Some(name -> Harness.message(e)) }
+      Harness.quiesce(spark)
+      failed
+    }.toMap
+    queries.map { case (name, fn) =>
+      name -> (warmFailure.get(name) match {
+        case Some(err) => Left(err)
+        case None =>
+          try {
+            val rs = (1 to (if (heavy(name)) runsHeavy else runs)).map { _ =>
+              Harness.quiesce(spark)
+              layers.time(fn(spark, sfDir))(_.count())
+            }
+            val best = rs.minBy(_.wall)
+            System.err.println(best.line(name))
+            Right((best, rs.map(_.wall).max))
+          } catch { case e: Throwable => Left(Harness.message(e)) }
+      })
+    }
+  }
+
+  private def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** Seconds of the queries that succeeded. */
+  def total(results: Map[String, Outcome]): Double =
+    results.values.collect { case Right((best, _)) => best.wall }.sum
+
+  /** The `queries` (min seconds), `spread` and `errors` fields: a failed
+    * query is null in `queries` and `spread` and has its message in
+    * `errors`. The per-query run spread (max/min across this session's
+    * runs) sits next to the min map because maps disagreed 1.3-2x on the
+    * tail purely from host noise — a consumer can tell "this 2.1 swung
+    * 1.9-3.8 across runs" from the line alone. Separate top-level fields
+    * keep the `queries` name->seconds contract untouched. */
+  def fields(results: Map[String, Outcome]): String = {
+    def field(f: ((Harness.Run, Double)) => Double) = Harness.jsonObj(
+      results.map { case (k, v) => k -> v.fold(_ => "null", r => fmt(f(r))) })
+    val queries = field(_._1.wall)
+    val spread = field { case (best, max) => if (best.wall > 0) max / best.wall else 1.0 }
+    val errors = Harness.jsonObj(results.collect { case (k, Left(e)) => k -> Harness.jsonStr(e) })
+    s""""queries":$queries,"spread":$spread,"errors":$errors"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session (codegen, parquet footer cache, JIT) so the first
-    // measured query doesn't absorb fixed startup cost.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     // optional comma-separated query-name filter for profiling runs
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
-    // Warm-run protocol, matching the reference's published numbers and
-    // its own harness (paper §7.1 reports WARM latencies; in-repo
-    // DPPerfBenchmarks uses runCount=7): each query runs `runs` times
-    // and the minimum is reported. Spark's data cache is cleared between
-    // runs — only code paths (codegen, JIT) stay warm, the data is
-    // re-read every run.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val selected = Harness.select(only)
+    val spark = Harness.session("graft-bench")
+    Harness.warm(spark, sfDir)
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
-    // The dedup_/ann_ family actually executes max(runs, 3) runs (see
-    // perQueryRuns below), so a top-level "runs" alone would misstate
-    // the denominator behind min/spread for exactly the noisiest family
-    // the spread field exists for. `runs_heavy` is emitted next to it:
-    // the two fields plus the name-prefix rule fully determine every
-    // query's run count.
+    // The dedup_/ann_ family actually executes max(runs, 3) runs, so a
+    // top-level "runs" alone would misstate the denominator behind
+    // min/spread for exactly the noisiest family the spread field exists
+    // for. `runs_heavy` is emitted next to it: the two fields plus the
+    // name-prefix rule fully determine every query's run count.
     val runsHeavy = math.max(runs, 3)
-    // Cross-query hygiene (r5 verdict): `clearCache()` alone does not free
-    // localCheckpoint RDD blocks, so the dedup family's checkpointed
-    // signature RDDs stayed resident and inflated later measurements by
-    // 3-5x (dedup_jaccard_3gram 4.20 s in-suite vs 1.09 s isolated on
-    // identical code). Before every timed run: drop ALL persisted RDD
-    // blocks (covers caches and local checkpoints), then GC-quiesce so
-    // the timed region starts with a quiet heap. Runs outside the timed
-    // region, so its own cost never lands in a measurement.
-    def quiesce(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(rdd => try rdd.unpersist(blocking = true) catch { case _: Throwable => () })
-      System.gc()
-    }
-    // Throwaway execution of one REAL query before any timing: the
-    // generic warmup above doesn't touch the aggregate/shuffle codegen
-    // paths, so the first timed query absorbed ~1.6 s of residual
-    // session warmup (r3: nextk_basic 1.78 s vs the identically-shaped
-    // nextk_desc 0.17 s) — distorting cross-round comparisons whenever
-    // the driver runs with SPARK_GRAFT_RUNS=1.
-    selected.headOption.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () }
-      quiesce()
-    }
-    val results = selected.map { case (name, fn) =>
-      // The dedup/ANN family is the most GC/cache-sensitive (checkpointed
-      // signatures, broadcast candidate sets); give it one extra run so a
-      // single perturbed execution can't define the reported minimum.
-      val heavyFamily = name.startsWith("dedup_") || name.startsWith("ann_")
-      val perQueryRuns = if (heavyFamily) math.max(runsHeavy, runs) else runs
-      val times = (1 to perQueryRuns).map { _ =>
-        quiesce()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
-      name -> ((times.min, times.max))
-    }
-    def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v._1) }
-      .mkString("{", ",", "}")
-    // per-query run spread (max/min across this session's runs) next to
-    // the min map: every map this round disagreed 1.3-2x on the tail
-    // purely from host noise, so the artifact itself now carries the
-    // evidence of how (un)stable each number was — a consumer can tell
-    // "this 2.1 swung 1.9-3.8 across runs" from the line alone, no
-    // second session needed. Separate top-level field so the `queries`
-    // name->seconds contract is untouched.
-    val spreads = results.map { case (k, v) =>
-      "\"" + k + "\":" + fmt(if (v._1 > 0) v._2 / v._1 else 1.0)
-    }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
+    val results = measure(spark, sfDir, selected, runs, runsHeavy, new Harness.Layers(spark))
     // ann_pq_build phase attribution (train vs encode) from the build's
     // driver-side receipt — a separate top-level field, NOT a queries
     // entry (its two phases are already inside ann_pq_build's total).
@@ -127,12 +125,12 @@ object Bench {
     // count now writes bench_out_c{cpus}.json / bench_out_r{N}_c{cpus}
     // .json instead — the 32-core names are only ever written by 32-core
     // runs, so the primary map survives the scaling pass.
-    val cpuSuffix = if (cpus == "32") "" else s"_c$cpus"
+    val cpuSuffix = if (Harness.cpus == 32) "" else s"_c${Harness.cpus}"
     val benchMap = if (only.isEmpty)
       round.map(r => s"bench_out_r$r$cpuSuffix.json") else None
     val mapField = benchMap.map(f => s""","bench_map":"$f"""").getOrElse("")
     val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"runs_heavy":$runsHeavy,"heavy_prefixes":["dedup_","ann_"],"queries":$qs,"spread":$spreads,"sf":"$sfDir"$buildSplit$mapField}"""
+      s"""{"metric":"total","value":${fmt(total(results))},"unit":"sec","runs":$runs,"runs_heavy":$runsHeavy,"heavy_prefixes":["dedup_","ann_"],${fields(results)},"sf":"$sfDir"$buildSplit$mapField}"""
     spark.stop()
     // The full per-query line is >2 KB (150+ queries), so a 2000-char
     // stdout tail cannot hold it whole. Survival strategy:

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps formatted physical plans of EVERY declared query to a markdown
@@ -8,121 +7,33 @@ import org.apache.spark.sql.execution.FormattedMode
   * the ones you'd want: pushdown, pruning, partial aggregates, bounded
   * top-K, broadcast only on small sides, no single-partition funnels.
   *
-  * Since r12 the default set is `SparkEntry.queries.keys` (sorted), not
-  * a curated headline list — a query that exists but never lands in the
-  * dump is an audit hole (r11's `setop_minus_dups` was exactly that), so
-  * coverage is now mechanical: every declared query gets a section, and
-  * a plan that fails to build shows up as a visible FAILED entry.
+  * The default set is every declared query (sorted) — a query that
+  * exists but never lands in the dump is an audit hole (r11's
+  * `setop_minus_dups` was exactly that) — and a plan that fails to build
+  * shows up as a visible FAILED entry. An unknown name throws.
   *
   * Usage: runMain graft.Plans <sfDir> <outFile> [q1,q2,...]
   */
 object Plans {
-  // retained only for `runMain graft.Plans <sf> <out> headline`
-  private val headline = Seq(
-    "f_range", "hist_numeric", "hist_cdf", "topk_sort", "q1_pricing_summary",
-    "heavy_mg", "join_revenue_by_priority", "asof_join", "dedup_minhash_lsh",
-    "ann_topk_plan", "interval_hist_plan", "pack_sequences", "shuffle_rows",
-    "string_boundaries", "row_at_position", "dedup_embedding_lsh",
-    "range_join_week", "join_skew_salted", "rollup_pricing", "events_funnel",
-    "sample_weighted", "events_cumulative",
-    "dedup_jaccard_dfcut", "dp_quantized_hist_str", "schema_infer",
-    "col_time_roundtrip", "corpus_mix", "dedup_incremental",
-    "q3_shipping_priority", "q5_local_supplier", "sample_per_source",
-    "q6_forecast_revenue", "q4_order_priority", "q17_small_qty_revenue",
-    "q18_large_volume_customer", "q21_waiting_supplier",
-    "q2_min_cost_supplier", "q7_volume_shipping", "q10_returned_items",
-    "q14_promo_effect", "q16_supplier_part_cnt", "q19_disjunctive_revenue",
-    "q20_part_promotion", "q22_global_sales_opportunity",
-    "q8_market_share", "q12_late_lines", "q13_customer_distribution",
-    "q15_top_supplier",
-    "text_remove_dup_spans", "dedup_edit_distance",
-    // r6 additions: partsupp-proxy anchors, the headline jaccard with
-    // its df-cut ON, shapefile-fed geo, and real-decode multimodal
-    "q9_profit_by_nation", "q11_important_parts", "dedup_jaccard_3gram",
-    "geo_shapefile_tag", "multimodal_features",
-    // r6 storable-sketch trio: one partial-agg pass + blob merges
-    "sketch_distinct_rollup", "sketch_heavy_rollup", "sketch_quantile_rollup",
-    "corpus_sketch_report",
-    // r6 late additions: commercial-codec decode (narrow maps), MP4
-    // box walk, true pixel resize, G.711 expansion, theta set algebra
-    "multimodal_codec_features", "multimodal_video_meta",
-    "multimodal_resize_pixels", "multimodal_ulaw_features",
-    "multimodal_aiff_features", "sketch_theta_algebra", "zonemap_skip",
-    "dedup_delta_novelty", "geo_polygon_holes", "ann_pq_topk", "ann_ivfpq_topk",
-    // r7 additions: PQ index build receipt (the serve paths above now
-    // read the persisted index), the JS-gesture surface, the Greenplum
-    // dump round-trip, the new pipeline operators, and the multimodal
-    // dedup family
-    "ann_pq_build", "dynamic_udf_js", "dynamic_filter_js",
-    "greenplum_dump_roundtrip", "text_rarity", "corpus_mix_temperature",
-    "multimodal_image_hash", "multimodal_image_neardup",
-    "multimodal_audio_fingerprint", "multimodal_audio_dedup",
-    "multimodal_video_frames", "multimodal_video_dedup",
-    "ann_topk_quantized",
-    // r8 additions: the BPE train/encode/pack family, the θ=0.7 LSH
-    // headline (distinct-before-verify candidates), the byte-offset
-    // Greenplum aligned read, and the decoded-pixel video path
-    "text_tokens_bpe", "text_tokens_ids", "pack_sequences_bpe",
-    "pack_sequences_ids", "corpus_mix_bpe", "bpe_train_merges",
-    "text_detokenize", "dedup_embedding_lsh_stress",
-    "multimodal_video_frames_raw", "bpe_train_continue",
-    "corpus_mix_temperature_tokens", "bpe_encode_merge_order",
-    "json_parse_errors",
-    // r11 additions: row-identity set algebra (rid semi/anti joins),
-    // the trained-vocab packing loop, and the df-cut edit family after
-    // the codegen window-hash rewrite
-    "setop_union_dups", "setop_intersect_dups", "pack_sequences_trained",
-    "dedup_edit_dfcut",
-    // r11 full-program JS tier: interpreted per-row map/filter — the
-    // plans must show pruned ReadSchema (only referenced fields) and,
-    // for the filter, no lost pushdown on the surrounding projection
-    "dynamic_udf_js_loop", "dynamic_filter_js_loop", "dynamic_udf_js_func",
-    "dynamic_udf_js_array",
-    // r11 continuation: ranked retrieval, the Aho-Corasick lexicon
-    // scan (ONE automaton pass, broadcast zero-hit restore), the
-    // bigram-LM family (one visible scan — the model side is a
-    // checkpointed vocab-sized frame), and the narrow quality signals
-    "bm25_topk", "text_blocklist", "text_blocklist_share",
-    "text_lm_surprisal", "text_dsir_weight", "text_ccnet_buckets",
-    "text_entropy", "text_oov_rate", "text_normalize_nfc",
-    "text_tokens_fertility", "text_winnow_pairs", "dedup_exact_nfc",
-    "source_similarity", "pack_efficiency", "embedding_domain_score")
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS_r3.md"
-    val names =
-      if (args.length > 2 && args(2) == "headline") headline
-      else if (args.length > 2) args(2).split(",").toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val queries = Harness.select(args.lift(2)).toSeq.sortBy(_._1)
+    val spark = Harness.session("graft-plans")
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
-    sb ++= s"# ${out.stripSuffix(".md")} — physical plans of headline queries ($sfDir, local)\n\n"
+    sb ++= s"# ${out.stripSuffix(".md")} — physical plans of declared queries ($sfDir, local)\n\n"
     sb ++= "Generated with `df.queryExecution.explainString(FormattedMode)`.\n"
     sb ++= "Properties to read for: `PushedFilters`/`ReadSchema` at the scan,\n"
     sb ++= "partial→final HashAggregate pairs, `TakeOrderedAndProject` for top-K,\n"
     sb ++= "broadcast only on genuinely small sides, WholeStageCodegen spans,\n"
     sb ++= "and NO `Exchange SinglePartition` on data-sized inputs.\n\n"
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None =>
-          // a typo'd name must be visible in the evidence file, not a
-          // silently absent section
-          sb ++= s"## $name\n\nMISSING: no such query in SparkEntry.queries\n\n"
-        case Some(fn) =>
-          try {
-            val p = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
-            sb ++= s"## $name\n\n```\n$p\n```\n\n"
-          } catch {
-            case e: Throwable => sb ++= s"## $name\n\nFAILED: ${e.getMessage}\n\n"
-          }
+    queries.foreach { case (name, fn) =>
+      try {
+        val p = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+        sb ++= s"## $name\n\n```\n$p\n```\n\n"
+      } catch {
+        case e: Throwable => sb ++= s"## $name\n\nFAILED: ${e.getMessage}\n\n"
       }
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale probes: replicate an sf0.1 input N× (with key offsets so
@@ -26,13 +26,7 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session("graft-scaleprobe")
     spark.sparkContext.setLogLevel("ERROR")
     val wanted: String => Boolean =
       if (args.isEmpty) _ => true else args.toSet.contains
@@ -398,7 +392,7 @@ object ScaleProbe {
     // are single-line, which probes the degenerate worst case: every
     // "line" is a whole document (maximum hash-input bytes per line)
     probe("text_remove_dup_lines", Seq(1, 20)) { c =>
-      text.TextAnalysis.removeDupLines(saltedDocs(c), 2)
+      text.TextAnalysis.removeDupLines(saltedDocs(c))
         .agg(sum(col("n_kept"))).head().getLong(0)
     }
 

@@ -3882,12 +3882,12 @@ object SparkEntry {
     // the destructive CCNet/RefinedWeb pass: boilerplate lines cut from
     // every non-keeper doc, text reassembled; 128-bit line keys
     "text_remove_dup_lines" -> ((s, d) =>
-      graft.text.TextAnalysis.removeDupLines(docsNl(s, d), 2)),
+      graft.text.TextAnalysis.removeDupLines(docsNl(s, d))),
     // same transform under the CCNet NORMALIZED key (digit/punct-blind
     // hash): the planted "page 1 of 10"/"page 2 of 10" twin collapses
     // here and ONLY here; reassembled text keeps the raw lines
     "text_remove_dup_lines_norm" -> ((s, d) =>
-      graft.text.TextAnalysis.removeDupLines(docsNl(s, d), 2, normalized = true)),
+      graft.text.TextAnalysis.removeDupLines(docsNl(s, d), normalized = true)),
     // the serve half of the line-dedup loop: strip EVERY occurrence
     // against the FROZEN list (no keeper survival — the ingest-gate
     // semantics; the list side broadcasts). r15: the list comes from

@@ -1,55 +1,54 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each selected query's result → parquet,
+  * plus oracle_sql.json and gates.json (restricted to the selection) for
+  * the DuckDB compare. Exits non-zero if any query failed; the JSON files
+  * are written either way.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q1,q2,...] */
 object Verify {
+  /** Write each query to `$outDir/$name`, deleting what an earlier run
+    * left there first, so a query that throws leaves no output at all
+    * (an aborted write still leaves its empty directory; that goes too).
+    * Returns the failures as (name, message). */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Map[String, Harness.Query]): Seq[(String, String)] = {
+    new java.io.File(outDir).mkdirs()
+    queries.toSeq.flatMap { case (name, fn) =>
+      val dir = new java.io.File(outDir, name)
+      engine.Artifacts.deleteRecursively(dir)
+      try {
+        fn(spark, sfDir).coalesce(1).write.parquet(dir.getPath)
+        None
+      } catch { case e: Throwable =>
+        engine.Artifacts.deleteRecursively(dir)
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> Harness.message(e))
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names — targeted re-checks
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // rows-only queries' gating specs as structured artifact fields:
-    // the driver records these queries as rows-only; gates.json names
-    // the test that actually asserts each one's correctness
-    val gates = SparkEntry.rowsOnlyGates
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/gates.json"), gates)
+    val selected = Harness.select(args.lift(2))
+    val spark = Harness.session("graft-verify")
+    val failures = dump(spark, sfDir, outDir, selected)
+    // oracleSql is read AFTER the dump: the PQ serve oracles render from
+    // the model the dumped results used. Rows-only queries' gating specs
+    // go to gates.json: the gate records these queries as rows-only,
+    // and gates.json names the test that actually asserts each one.
+    def write(file: String, m: Map[String, String]): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"), Harness.jsonObj(
+        m.filter { case (k, _) => selected.contains(k) }
+          .map { case (k, v) => k -> Harness.jsonStr(v) }))
+    write("oracle_sql.json", SparkEntry.oracleSql)
+    write("gates.json", SparkEntry.rowsOnlyGates)
     spark.stop()
+    if (failures.nonEmpty) {
+      System.err.println(s"[verify] ${failures.size} failed: ${failures.map(_._1).mkString(" ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -27,4 +27,10 @@ package object graftshim {
 
   def experimentalStrategies(spark: SparkSession): ExperimentalMethods =
     spark.asInstanceOf[classic.SparkSession].experimental
+
+  /** Wait (up to 10 s) until every listener event posted so far has
+    * been delivered. */
+  def drainListeners(spark: SparkSession): Unit =
+    try spark.sparkContext.listenerBus.waitUntilEmpty()
+    catch { case _: java.util.concurrent.TimeoutException => () }
 }

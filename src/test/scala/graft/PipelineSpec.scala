@@ -887,7 +887,7 @@ class PipelineSpec extends SparkSpec {
       "boiler\nunique one",           // doc1: loses its copy
       "same line\nsame line\n\ntail", // doc2: WITHIN-doc repeat only (df=1) → kept
       "boiler"))                      // doc3: 100% boilerplate → erased, not dropped
-    val r = TextAnalysis.removeDupLines(d, 2).orderBy("doc_id").collect()
+    val r = TextAnalysis.removeDupLines(d).orderBy("doc_id").collect()
     assert(r.length == 4)
     assert(r(0).getString(3) == "boiler\nunique zero\nboiler")
     assert(r(1).getString(3) == "unique one" && r(1).getLong(2) == 1L)
@@ -935,18 +935,18 @@ class PipelineSpec extends SparkSpec {
       "page 2 of 10!!\nbody beta",
       "unrelated line\nbody gamma"))
     // raw matching: nothing dedups
-    val raw = TextAnalysis.removeDupLines(d, 2).orderBy("doc_id").collect()
+    val raw = TextAnalysis.removeDupLines(d).orderBy("doc_id").collect()
     assert(raw.forall(r => r.getLong(1) == r.getLong(2)))
     // normalized: both page lines share the key 'page of'; doc0 keeps
     // its RAW line, doc1 loses its (differently-rendered) copy
-    val n = TextAnalysis.removeDupLines(d, 2, normalized = true)
+    val n = TextAnalysis.removeDupLines(d, normalized = true)
       .orderBy("doc_id").collect()
     assert(n(0).getString(3) == "page 1 of 10\nbody alpha")
     assert(n(1).getString(3) == "body beta")
     assert(n(2).getString(3) == "unrelated line\nbody gamma")
     // a digit/punct-ONLY line normalizes to '' and must never dedup
     val d2 = docsDF(Seq("123!!\nx one", "456??\nx two"))
-    val n2 = TextAnalysis.removeDupLines(d2, 2, normalized = true)
+    val n2 = TextAnalysis.removeDupLines(d2, normalized = true)
       .orderBy("doc_id").collect()
     assert(n2.forall(r => r.getLong(1) == r.getLong(2)))
   }

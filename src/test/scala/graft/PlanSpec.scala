@@ -658,7 +658,7 @@ class PlanSpec extends SparkSpec {
 
   test("line dedup: hash-keyed dup agg, no cartesian, broadcast-free corpus joins") {
     val d = Tables.documents(spark, sf)
-    val p = plan(graft.text.TextAnalysis.removeDupLines(d, 2))
+    val p = plan(graft.text.TextAnalysis.removeDupLines(d))
     // the dup table and the cut-position join key on the 128-bit line
     // hash — never a broadcast of a corpus-sized side, never a BNLJ
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
